@@ -96,7 +96,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     ident.namespace.foldLeft(Paths.get(root))(_.resolve(_)).resolve(ident.name)
 
   private def isTable(p: java.nio.file.Path): Boolean =
-    Files.isDirectory(p.resolve("_manifests"))
+    SnapshotStore.isTable(p.toString)
 
   // -- TableCatalog ---------------------------------------------------------
 
@@ -134,8 +134,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   }
 
   private def commitMicros(dir: String, v: Long): Long =
-    Files.getLastModifiedTime(
-      Paths.get(dir, "_manifests", f"v$v%013d.json")).toMillis * 1000L
+    SnapshotStore.committedAtMillis(dir, v) * 1000L
 
   /** The snapshot directory `ident` denotes: either directly
     * (`graft.ns.table`), or — when `ident.name` is a metadata-table
@@ -171,9 +170,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       throw new IllegalArgumentException(
         s"$catName.${ident.name}: no committed version $v " +
           s"(have ${SnapshotStore.versions(tableDir).mkString(", ")})")
-    val entries = SnapshotStore.entriesAt(tableDir, v)
+    val m = SnapshotStore.manifestAt(tableDir, v)
+    val entries = SnapshotStore.entriesOf(tableDir, m)
     val hasDvs = entries.exists(_.contains("#dv="))
-    val schema = SnapshotStore.schemaAt(tableDir, v)
+    val schema = m.schema
     // Renamed columns resolve by field id — assert the read-side conf
     // whenever the served schema carries ids (no-op otherwise).
     if (schema.exists(s => SnapshotStore.fieldIdsOf(s).nonEmpty))
@@ -220,9 +220,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       }
       val rows = SnapshotStore.versions(tableDir)
         .filter(v => asOf.forall(v <= _)).map { v =>
-        val entries = SnapshotStore.entriesAt(tableDir, v)
+        val m = SnapshotStore.manifestAt(tableDir, v)
+        val entries = SnapshotStore.entriesOf(tableDir, m)
         Row(v, new java.sql.Timestamp(commitMicros(tableDir, v) / 1000L),
-          SnapshotStore.rowsAt(tableDir, v), entries.size,
+          m.rows, entries.size,
           entries.count(_.contains("#dv=")))
       }
       new GraftMetaTable(name, StructType(Seq(

@@ -1,12 +1,14 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 /** Catalog-level atomicity ACROSS [[SnapshotStore]] tables — the
   * "multi-table transaction" a lakehouse catalog adds on top of
   * single-table snapshots, built with the same primitive: one versioned
-  * pointer file, advanced by atomic create-exclusive.
+  * pointer file, advanced by an exclusive atomic publish
+  * ([[Manifest.publish]]).
   *
   * Mechanism (the Iceberg-REST/HMS pointer-swap design):
   *
@@ -17,7 +19,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   *     REAL but INVISIBLE to catalog readers, because a catalog reader
   *     resolves every table version through one catalog snapshot.
   *   - It then publishes the new name→version map as the next catalog
-  *     version: one CREATE_NEW, so the cross-table cut flips atomically.
+  *     version: one exclusive hard-link of a fully written file, so the
+  *     cross-table cut flips atomically.
   *     Two racing publishers race for the version number; the loser gets
   *     [[SnapshotStore.SnapshotConflictException]] and must re-read,
   *     re-validate, and retry — same optimistic contract as the store.
@@ -43,7 +46,6 @@ object SnapshotCatalog {
     if (!Files.isDirectory(dir)) return Nil
     val it = Files.list(dir)
     try {
-      import scala.jdk.CollectionConverters._
       it.iterator().asScala.map(_.getFileName.toString)
         .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
           n.stripPrefix("v").stripSuffix(".json").toLong }
@@ -59,19 +61,11 @@ object SnapshotCatalog {
   def snapshot(root: String, asOf: Option[Long] = None): Map[String, Long] = {
     val v = asOf.orElse(currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no catalog snapshot at $root"))
-    val txt = new String(Files.readAllBytes(path(root, v)), StandardCharsets.UTF_8)
-    // Scope to the tables MAP (same token discipline as the store's
-    // parseManifest) — an unscoped sweep would silently absorb any future
-    // numeric top-level field into the returned table map. Names are
-    // writer-controlled identifiers (no quotes/escapes/braces, enforced
-    // at publish); versions are plain longs, so the map ends at the first
-    // '}' after the token.
-    val tok = "\"tables\":{"
-    val idx = txt.indexOf(tok)
-    require(idx >= 0, s"malformed catalog manifest at version $v of $root")
-    val region = txt.substring(idx + tok.length, txt.indexOf("}", idx))
-    "\"([^\"]+)\":(-?\\d+)".r.findAllMatchIn(region)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    // Only the tables map: other top-level fields are not tables.
+    val tables = Manifest.readJson(path(root, v)).get("tables")
+    require(tables != null && tables.isObject,
+      s"malformed catalog manifest at version $v of $root")
+    tables.properties.asScala.map(e => e.getKey -> e.getValue.asLong).toMap
   }
 
   /** Atomically publish a new cross-table cut. `expectedBase` carries the
@@ -82,29 +76,22 @@ object SnapshotCatalog {
   def publish(root: String, tables: Map[String, Long],
               expectedBase: Option[Long]): Long = {
     require(tables.nonEmpty, "empty catalog publish")
-    require(tables.keys.forall(n =>
-      !n.contains("\"") && !n.contains("\\") &&
-        !n.contains("{") && !n.contains("}")),
-      "table names must not contain quotes, backslashes, or braces")
     val cur = currentVersion(root)
     if (cur != expectedBase)
       throw new SnapshotStore.SnapshotConflictException(
         s"catalog at $root moved: expected base $expectedBase, found $cur")
     val next = cur.getOrElse(-1L) + 1
-    val body = tables.toSeq.sortBy(_._1)
-      .map { case (n, v) => s""""$n":$v""" }
-      .mkString("""{"tables":{""", ",", "}}")
-    val p = path(root, next)
-    Files.createDirectories(p.getParent)
-    try {
-      Files.write(p, body.getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-      next
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new SnapshotStore.SnapshotConflictException(
-          s"catalog version $next already committed at $root")
+    val body = Manifest.renderJson { g =>
+      g.writeStartObject()
+      g.writeObjectFieldStart("tables")
+      tables.toSeq.sortBy(_._1).foreach { case (n, v) => g.writeNumberField(n, v) }
+      g.writeEndObject()
+      g.writeEndObject()
     }
+    if (!Manifest.publish(path(root, next), body))
+      throw new SnapshotStore.SnapshotConflictException(
+        s"catalog version $next already committed at $root")
+    next
   }
 
   /** Read table `name` at the pinned catalog cut — the reader-side half

@@ -66,10 +66,11 @@ object SnapshotRelation {
             partCol: Option[String] = None): DataFrame = {
     val v = asOf.orElse(SnapshotStore.currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
-    val schema = SnapshotStore.schemaAt(root, v).getOrElse(
+    val m = SnapshotStore.manifestAt(root, v)
+    val schema = m.schema.getOrElse(
       throw new IllegalStateException(
         s"version $v of $root predates schema recording; use SnapshotStore.read"))
-    val entries = SnapshotStore.entriesAt(root, v)
+    val entries = SnapshotStore.entriesOf(root, m)
     if (entries.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,10 +19,13 @@ import org.apache.spark.sql.functions._
   *     `table/_manifests/v<13-digit>.json` → list of data-file paths
   *     relative to the table root (+ row count for audit, + optional
   *     writer transaction marker, + optional per-file column stats).
-  *   - COMMIT = create-exclusive of the next manifest. `CREATE_NEW` is
-  *     atomic on POSIX (and maps to the atomic variants object stores /
-  *     HDFS offer); two racing writers race for the same version number
-  *     and exactly one wins. The loser REBASES automatically when the two
+  *   - COMMIT = exclusive publish of the next manifest: the bytes are
+  *     written and fsynced under a hidden tmp name, then hard-linked to
+  *     the version's name ([[Manifest.publish]]). The link is atomic and
+  *     exclusive, so a reader never sees a partial manifest and two racing
+  *     writers race for the same version number with exactly one winner
+  *     (Delta and Iceberg publish their logs the same way on
+  *     filesystems). The loser REBASES automatically when the two
   *     write sets are disjoint ([[commitRebasing]] — driver-side manifest
   *     math, the finished data files are reused) and surfaces a
   *     [[SnapshotConflictException]] only on a true intersection
@@ -61,7 +64,7 @@ object SnapshotStore {
   /** Above this file count a commit writes the SECTIONED manifest layout
     * (measured: the flat layout is driver-bound at million-file scale —
     * 4.9 s parse, 11 s CDC diff, 95 MB text at 1e6 entries; see
-    * ManifestProbe + BASELINE.md). Sections are partition-grouped,
+    * BASELINE.md). Sections are partition-grouped,
     * content-addressed files read lazily: a partition-pruned read parses
     * only matching sections, an incremental diff skips identical section
     * refs wholesale, and a commit re-writes only sections whose content
@@ -145,7 +148,24 @@ object SnapshotStore {
   private def manifestPath(root: String, version: Long): Path =
     Paths.get(root, ManifestDir, f"v$version%013d.json")
 
-  /** All committed versions, ascending (empty for a non-table path). */
+  /** Whether `root` holds a snapshot table (has a manifest log). */
+  def isTable(root: String): Boolean = Files.isDirectory(Paths.get(root, ManifestDir))
+
+  /** When `version` was published: its manifest's mtime (the file is
+    * linked into place whole and never rewritten).
+    */
+  def committedAtMillis(root: String, version: Long): Long =
+    Files.getLastModifiedTime(manifestPath(root, version)).toMillis
+
+  /** The one parse of `version`'s manifest; every field accessor below
+    * projects it. A truncated or malformed manifest throws naming the file.
+    */
+  private[graft] def manifestAt(root: String, version: Long): Manifest =
+    Manifest.read(manifestPath(root, version), statsCols(root).headOption)
+
+  /** All committed versions, ascending (empty for a non-table path). A
+    * publish's hidden tmp file (`.v…json.<uuid>.tmp`) is not a version.
+    */
   def versions(root: String): Seq[Long] = {
     val dir = Paths.get(root, ManifestDir)
     if (!Files.isDirectory(dir)) return Nil
@@ -222,146 +242,36 @@ object SnapshotStore {
     else s"__part=${ExternalCatalogUtils.escapePathName(value.toString)}"
   }
 
-  /** Minimal JSON codec for the manifest: row count, table schema,
-    * optional writer transaction marker, optional per-file column stats,
-    * then the sorted path list. Everything before `"files":[` on purpose
-    * — [[parseManifest]] treats the tail after that token as file
-    * entries. Paths are table-root-relative so the table directory can
-    * be moved/renamed wholesale.
-    */
-  private def renderManifest(files: Seq[String], rows: Long,
-                             stats: Option[(Seq[String], FileStats)],
-                             txn: Option[(String, Long)],
-                             schema: Option[org.apache.spark.sql.types.StructType],
-                             partCol: Option[String],
-                             changeKey: Option[Seq[String]] = None): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val schemaJson = schema.fold("") { st => s""""schema":${q(st.json)},""" } +
-      partColJson(partCol) + changeKeyJson(changeKey)
-    val txnJson = txn.fold("") { case (app, batch) =>
-      s""""txn":{"app":${q(app)},"batch":$batch},"""
-    }
-    val statsJson = stats.fold("") { case (cols, ranges) =>
-      val colsJson = cols.map(q).mkString("[", ",", "]")
-      val rangesJson = ranges.toSeq.sortBy(_._1).map { case (f, byCol) =>
-        val inner = byCol.toSeq.sortBy(_._1)
-          .map { case (c, (lo, hi)) => s"${q(c)}:[$lo,$hi]" }
-          .mkString("{", ",", "}")
-        s"${q(f)}:$inner"
-      }.mkString("{", ",", "}")
-      s""""stats":{"cols":$colsJson,"ranges":$rangesJson},"""
-    }
-    files.sorted.map(q)
-      .mkString(s"""{"rows":$rows,$schemaJson$txnJson$statsJson"files":[""",
-        ",", "]}")
-  }
-
-  /** The layout record as manifest JSON. ALWAYS emits the key (null for
-    * an unpartitioned commit) so [[partColAt]] can distinguish "this
-    * commit declares no partitioning" from "manifest predates the
-    * record" — the latter falls back to the legacy side file.
-    */
-  private def partColJson(partCol: Option[String]): String = partCol match {
-    case Some(c) =>
-      s""""part_col":"${c.replace("\\", "\\\\").replace("\"", "\\\"")}","""
-    case None => """"part_col":null,"""
-  }
-
   /** The partition column recorded IN version `v`'s manifest:
     * `Some(Some(c))` partitioned, `Some(None)` explicitly unpartitioned,
     * `None` when the manifest predates the embedded record (legacy).
     */
-  private[graft] def partColAt(root: String, version: Long): Option[Option[String]] = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    if (txt.contains(""""part_col":null""")) Some(None)
-    else "\"part_col\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt)
-      .map(m => Some(m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")))
-  }
+  private[graft] def partColAt(root: String, version: Long): Option[Option[String]] =
+    manifestAt(root, version).partCol
 
   /** The row-identity key a keyed commit (MERGE INTO, keyed upsert)
     * declares in its manifest — what lets [[changes]] pair that commit's
     * delete+insert rows into update_preimage/update_postimage images (the
-    * Delta CDF contract). Escaped like every other manifest string.
+    * Delta CDF contract).
     */
-  private def changeKeyJson(key: Option[Seq[String]]): String = key match {
-    case Some(cols) if cols.nonEmpty =>
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      s""""change_key":${cols.map(q).mkString("[", ",", "]")},"""
-    case _ => ""
-  }
-
-  /** The change key version `v`'s commit declared, if any. */
-  private[graft] def changeKeyAt(root: String, version: Long): Option[Seq[String]] = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    "\"change_key\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt).map { m =>
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(m.group(1))
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-    }.filter(_.nonEmpty)
-  }
-
-  /** Sectioned-layout root manifest: everything EXCEPT per-file data
-    * (rows/schema/txn/declared stats cols), plus the partition-dir →
-    * section-file map. Per-file paths and stats live in the sections.
-    */
-  private def renderSectionedManifest(rows: Long, secRefs: Seq[(String, String)],
-                                      statsColNames: Option[Seq[String]],
-                                      txn: Option[(String, Long)],
-                                      schema: Option[org.apache.spark.sql.types.StructType],
-                                      partCol: Option[String],
-                                      changeKey: Option[Seq[String]] = None): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val schemaJson = schema.fold("") { st => s""""schema":${q(st.json)},""" } +
-      partColJson(partCol) + changeKeyJson(changeKey)
-    val txnJson = txn.fold("") { case (app, batch) =>
-      s""""txn":{"app":${q(app)},"batch":$batch},"""
-    }
-    val colsJson = statsColNames.fold("") { cols =>
-      s""""stats_cols":${cols.map(q).mkString("[", ",", "]")},"""
-    }
-    secRefs.sortBy(_._1).map { case (pd, ref) => s"${q(pd)}:${q(ref)}" }
-      .mkString(s"""{"rows":$rows,$schemaJson$txnJson$colsJson"sections":{""",
-        ",", "}}")
-  }
+  private[graft] def changeKeyAt(root: String, version: Long): Option[Seq[String]] =
+    manifestAt(root, version).changeKey
 
   /** The partition-dir → section-ref map of a sectioned manifest; None
-    * for the flat layout. Partition dirs are hive-path-escaped at write
-    * time (no quotes/backslashes/braces can appear), refs are md5 hex +
-    * ".list", so the map region ends at the first '}' after the token.
+    * for the flat layout.
     */
-  private[graft] def sectionsAt(root: String, version: Long): Option[Seq[(String, String)]] = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    val tok = "\"sections\":{"
-    val i = txt.indexOf(tok)
-    if (i < 0) None
-    else {
-      val region = txt.substring(i + tok.length, txt.indexOf("}", i))
-      Some("\"([^\"]*)\":\"([^\"]+)\"".r.findAllMatchIn(region)
-        .map(m => m.group(1) -> m.group(2)).toSeq)
-    }
-  }
+  private[graft] def sectionsAt(root: String, version: Long): Option[Seq[(String, String)]] =
+    manifestAt(root, version).sections
 
   /** One section: newline-separated `path` or `path<TAB>{"col":[lo,hi],…}`
     * lines — per-file stats ride the section so a pruned read never
     * touches table-proportional metadata.
     */
   private def readSection(root: String, ref: String): Seq[(String, Map[String, (Long, Long)])] = {
-    val txt = new String(
-      Files.readAllBytes(Paths.get(root, ManifestDir, SectionDir, ref)),
-      StandardCharsets.UTF_8)
+    val p = Paths.get(root, ManifestDir, SectionDir, ref)
+    val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
     if (txt.isEmpty) Nil
-    else txt.split('\n').toSeq.map { line =>
-      val t = line.indexOf('\t')
-      if (t < 0) line -> Map.empty[String, (Long, Long)]
-      else {
-        val ranges = "\"([^\"]+)\":\\[(-?\\d+),(-?\\d+)\\]".r
-          .findAllMatchIn(line.substring(t + 1))
-          .map(c => c.group(1) -> (c.group(2).toLong, c.group(3).toLong)).toMap
-        line.substring(0, t) -> ranges
-      }
-    }
+    else txt.split('\n').toSeq.map(Manifest.parseSectionLine(_, p.toString))
   }
 
   /** The table schema recorded at `version` — commits write it so reads
@@ -370,59 +280,24 @@ object SnapshotStore {
     * newer schema (parquet's standard missing-column fill). None only for
     * manifests predating schema recording.
     */
-  def schemaAt(root: String, version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt).map { m =>
-      val raw = m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-      org.apache.spark.sql.types.DataType.fromJson(raw)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
-  }
+  def schemaAt(root: String, version: Long): Option[org.apache.spark.sql.types.StructType] =
+    manifestAt(root, version).schema
 
   /** Per-file per-column ranges recorded at `version` (empty when the
     * table declares no stats columns). Keys are root-relative paths.
     */
-  private[graft] def statsAt(root: String, version: Long): FileStats = {
-    sectionsAt(root, version).foreach { refs =>
-      return refs.flatMap { case (_, ref) => readSection(root, ref) }
-        .filter(_._2.nonEmpty).toMap
-    }
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    val tok = "\"ranges\":{"
-    val start = txt.indexOf(tok)
-    if (start < 0) {
-      // Legacy single-column format: "stats":{"file":[lo,hi],...} with no
-      // nested per-column map — written before multi-column ranges. Map
-      // each flat range onto the FIRST declared stats column so pre-change
-      // tables keep their file-skipping (and the next commit re-renders
-      // them in the nested format).
-      val lt = "\"stats\":{"
-      val ls = txt.indexOf(lt)
-      val col0 = statsCols(root).headOption
-      if (ls < 0 || col0.isEmpty) return Map.empty
-      val region = txt.substring(ls + lt.length, txt.indexOf("\"files\":["))
-      return "\"([^\"]+)\":\\[(-?\\d+),(-?\\d+)\\]".r.findAllMatchIn(region)
-        .map(m => m.group(1) ->
-          Map(col0.get -> (m.group(2).toLong, m.group(3).toLong))).toMap
-    }
-    // Region must start AFTER the token: a region including `"ranges":{`
-    // makes the entry regex's first match swallow the "ranges" key plus
-    // the FIRST file's braces — that file's stats silently vanish, and
-    // because every commit re-renders carried stats, the loss compounds
-    // one file per commit (caught by SnapshotStoreSpec's multi-column
-    // strictness assert).
-    val region = txt.substring(start + tok.length, txt.indexOf("\"files\":["))
-    // file entry: "path":{"col":[lo,hi],...} — paths/cols are written by
-    // this object (uuid dirs, percent-escaped partition values, declared
-    // column names): no raw quotes inside either.
-    "\"([^\"]+)\":\\{([^}]*)\\}".r.findAllMatchIn(region).map { m =>
-      val byCol = "\"([^\"]+)\":\\[(-?\\d+),(-?\\d+)\\]".r
-        .findAllMatchIn(m.group(2))
-        .map(c => c.group(1) -> (c.group(2).toLong, c.group(3).toLong)).toMap
-      m.group(1) -> byCol
-    }.toMap
+  private[graft] def statsAt(root: String, version: Long): FileStats =
+    statsOf(root, manifestAt(root, version))
+
+  /** Per-file ranges of one parsed manifest: the flat layout carries
+    * them inline (legacy single-column maps land on the first declared
+    * stats column, so pre-change tables keep their file-skipping and the
+    * next commit re-renders them nested); sections carry them per line.
+    */
+  private def statsOf(root: String, m: Manifest): FileStats = m.sections match {
+    case Some(refs) =>
+      refs.flatMap { case (_, ref) => readSection(root, ref) }.filter(_._2.nonEmpty).toMap
+    case None => m.ranges
   }
 
   /** The declared stats columns (table-level config, set once at create;
@@ -500,43 +375,28 @@ object SnapshotStore {
       .filter(_._2.nonEmpty).toMap)
   }
 
-  private def parseManifest(root: String, version: Long): Seq[String] =
-    sectionsAt(root, version) match {
-      case Some(refs) =>
-        refs.flatMap { case (_, ref) => readSection(root, ref).map(_._1) }.sorted
-      case None =>
-        val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-          StandardCharsets.UTF_8)
-        // Scope to the files ARRAY before extracting quoted strings — the
-        // object keys ("rows", "txn", "stats", "files") are quoted too. File
-        // entries are uuid/partition/part-file names: no quotes or escapes
-        // inside, enforced at write time (writeDataFiles controls every
-        // component; partition values are percent-escaped).
-        val arr = txt.substring(txt.indexOf("\"files\":[") + "\"files\":[".length)
-        "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(arr).map(_.group(1)).toSeq
+  /** Every entry of one parsed manifest, sorted (sections read in full). */
+  private[graft] def entriesOf(root: String, m: Manifest): Seq[String] =
+    m.sections.fold(m.files) { refs =>
+      refs.flatMap { case (_, ref) => readSection(root, ref).map(_._1) }.sorted
     }
 
   /** The manifest-recorded row count of `version` (full snapshots record
     * their exact count; incremental commits record -1 — appends don't
-    * re-count history). Both manifest layouts lead with `"rows":N`.
+    * re-count history).
     */
-  def rowsAt(root: String, version: Long): Long = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    "\"rows\":(-?\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      .getOrElse(-1L)
-  }
+  def rowsAt(root: String, version: Long): Long = manifestAt(root, version).rows
 
   /** Data-file paths (absolute) of one version. */
   def filesAt(root: String, version: Long): Seq[String] =
-    parseManifest(root, version)
+    entriesAt(root, version)
       .map(rel => Paths.get(root, "data", entryPath(rel)).toString)
 
   /** Raw manifest entries of `version` (root-relative, DV annotations
     * intact) — what [[SnapshotRelation]]'s file index plans over.
     */
   private[graft] def entriesAt(root: String, version: Long): Seq[String] =
-    parseManifest(root, version)
+    entriesOf(root, manifestAt(root, version))
 
   /** The most recent batch id committed by writer `appId` at or before the
     * current version — the restarted-streaming-writer replay guard: a
@@ -544,43 +404,35 @@ object SnapshotStore {
     * [[graft.streaming.SnapshotSink]]).
     */
   def lastTxn(root: String, appId: String): Option[Long] = {
-    def q(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val fromLive = versions(root).reverse.iterator.flatMap { v =>
-      val txt = new String(Files.readAllBytes(manifestPath(root, v)),
-        StandardCharsets.UTF_8)
-      TxnRe.findFirstMatchIn(txt)
-        .filter(_.group(1) == q(appId)).map(_.group(2).toLong)
+      manifestAt(root, v).txn.filter(_._1 == appId).map(_._2)
     }.nextOption()
     // Vacuum may have pruned the manifest that carried this app's latest
     // marker — the checkpoint preserves it (Delta's SetTransaction state),
     // so the exactly-once replay guard survives retention. batchIds are
     // strictly increasing per app, so max is the latest.
-    (fromLive.toSeq ++ txnCheckpoint(root).get(q(appId)).toSeq)
-      .maxOption
+    (fromLive.toSeq ++ txnCheckpoint(root).get(appId).toSeq).maxOption
   }
 
-  private val TxnRe =
-    "\"txn\":\\{\"app\":\"((?:[^\"\\\\]|\\\\.)*)\",\"batch\":(-?\\d+)\\}".r
-
-  /** Escaped-app → latest batch markers carried forward by [[vacuum]] out
-    * of pruned manifests. Lives beside the manifests; vacuum never
-    * deletes it.
+  /** App → latest batch markers carried forward by [[vacuum]] out of
+    * pruned manifests. Lives beside the manifests; vacuum never deletes it.
     */
   private def txnCheckpoint(root: String): Map[String, Long] = {
     val p = Paths.get(root, ManifestDir, "txn_checkpoint.json")
     if (!Files.exists(p)) Map.empty
     else {
-      val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      "\"((?:[^\"\\\\]|\\\\.)*)\":(-?\\d+)".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap
+      import scala.jdk.CollectionConverters._
+      Manifest.readJson(p).properties.asScala.map(e => e.getKey -> e.getValue.asLong).toMap
     }
   }
 
   private def writeTxnCheckpoint(root: String, state: Map[String, Long]): Unit = {
     val p = Paths.get(root, ManifestDir, "txn_checkpoint.json")
-    val body = state.toSeq.sortBy(_._1)
-      .map { case (app, b) => s""""$app":$b""" }
-      .mkString("{", ",", "}")
+    val body = Manifest.renderJson { g =>
+      g.writeStartObject()
+      state.toSeq.sortBy(_._1).foreach { case (app, b) => g.writeNumberField(app, b) }
+      g.writeEndObject()
+    }
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
@@ -629,9 +481,9 @@ object SnapshotStore {
                             schema: Option[org.apache.spark.sql.types.StructType] = None,
                             partCol: Option[String] = None,
                             changeKey: Option[Seq[String]] = None): Long = {
-    val p = manifestPath(root, next)
-    Files.createDirectories(p.getParent)
-    val rendered =
+    val record = Manifest(rows, schema.map(_.json), Some(partCol),
+      changeKey, txn, stats.map(_._1))
+    val manifest =
       if (files.length >= sectionThreshold) {
         // Sectioned layout: group by partition dir ("" = unpartitioned),
         // content-address each group. An untouched partition re-renders
@@ -644,13 +496,9 @@ object SnapshotStore {
         val secDir = Paths.get(root, ManifestDir, SectionDir)
         Files.createDirectories(secDir)
         val refs = byPart.toSeq.sortBy(_._1).map { case (pd, fs) =>
-          val bodyTxt = fs.sorted.map { f =>
-            val st = statsMap.getOrElse(f, Map.empty)
-            if (st.isEmpty) f
-            else f + "\t" + st.toSeq.sortBy(_._1)
-              .map { case (c, (lo, hi)) => s""""$c":[$lo,$hi]""" }
-              .mkString("{", ",", "}")
-          }.mkString("\n")
+          val bodyTxt = fs.sorted.map(f =>
+            Manifest.renderSectionLine(f, statsMap.getOrElse(f, Map.empty)))
+            .mkString("\n")
           val ref = md5Hex(bodyTxt) + ".list"
           val sp = secDir.resolve(ref)
           if (!Files.exists(sp)) {
@@ -664,19 +512,12 @@ object SnapshotStore {
           }
           pd -> ref
         }
-        renderSectionedManifest(rows, refs, stats.map(_._1), txn, schema,
-          partCol, changeKey)
-      } else renderManifest(files, rows, stats, txn, schema, partCol, changeKey)
-    val body = rendered.getBytes(StandardCharsets.UTF_8)
-    try {
-      Files.write(p, body, StandardOpenOption.CREATE_NEW,
-        StandardOpenOption.WRITE)
-      next
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new SnapshotConflictException(
-          s"version $next already committed by a concurrent writer at $root")
-    }
+        record.copy(sections = Some(refs))
+      } else record.copy(files = files, ranges = stats.fold(Map.empty: FileStats)(_._2))
+    if (!Manifest.publish(manifestPath(root, next), Manifest.render(manifest)))
+      throw new SnapshotConflictException(
+        s"version $next already committed by a concurrent writer at $root")
+    next
   }
 
   /** How many times an incremental writer rebases onto concurrent commits
@@ -731,22 +572,22 @@ object SnapshotStore {
     val replacedSet = replaced.toSet
     def dirOf(e: String) =
       entryPath(e).split('/').find(_.startsWith("__part=")).getOrElse("")
+    // One parse per attempt: the base this attempt derives from.
+    var b = base
+    var bm = if (base >= 0) Some(manifestAt(root, base)) else None
     // The layout this write's files were produced against: what the base
     // manifest recorded (authoritative), or the caller's declaration for
     // writers on legacy/fresh tables.
     val writeLayout: Option[Option[String]] =
-      (if (base >= 0) partColAt(root, base) else None).orElse(
-        Some(partCol).filter(_.isDefined))
-    var b = base
+      bm.flatMap(_.partCol).orElse(Some(partCol).filter(_.isDefined))
     var attempts = 0
     while (true) {
-      val baseEntries = if (b >= 0) entriesAt(root, b) else Nil
+      val baseEntries = bm.fold(Seq.empty[String])(entriesOf(root, _))
       val kept = baseEntries.filterNot(replacedSet)
       val keptSet = kept.toSet
       val stats = freshStats.map { case (c, fresh) =>
-        val carried: FileStats =
-          if (b >= 0) statsAt(root, b).filter { case (k, _) => keptSet(k) }
-          else Map.empty
+        val carried: FileStats = bm.fold(Map.empty: FileStats)(
+          statsOf(root, _).filter { case (k, _) => keptSet(k) })
         c -> (carried ++ fresh)
       }
       try return commit(root, b + 1, kept ++ added, rows, stats, txn, schema,
@@ -755,6 +596,7 @@ object SnapshotStore {
         case conflict: SnapshotConflictException =>
           attempts += 1
           val cur = currentVersion(root).getOrElse(throw conflict)
+          val cm = manifestAt(root, cur)
           // Layout guard: a concurrent overwrite that re-partitioned the
           // table invalidates this write's file layout wholesale — the
           // files were already laid out under the scheme the BASE version
@@ -764,7 +606,7 @@ object SnapshotStore {
           // record skip the guard (side-file world, best effort).
           for {
             was <- writeLayout
-            now <- partColAt(root, cur)
+            now <- cm.partCol
             if was != now
           } throw new SnapshotConflictException(
             s"concurrent commit re-layouted $root (partition column now " +
@@ -777,13 +619,11 @@ object SnapshotStore {
           // column change is a conflict.
           def shape(s: Option[org.apache.spark.sql.types.StructType]) =
             s.map(_.fields.toSeq.map(f => (f.name, f.dataType)))
-          val okSchema =
-            if (b >= 0) shape(schemaAt(root, cur)) == shape(schemaAt(root, b))
-            else shape(schemaAt(root, cur)) == shape(schema)
+          val okSchema = shape(cm.schema) == shape(bm.fold(schema)(_.schema))
           if (!okSchema) throw new SnapshotConflictException(
             s"concurrent schema change at $root: this commit derives from " +
               s"version $b's schema; rebase abandoned")
-          val curEntries = entriesAt(root, cur)
+          val curEntries = entriesOf(root, cm)
           val curSet = curEntries.toSet
           val missing = replaced.filterNot(curSet)
           if (missing.nonEmpty) throw new SnapshotConflictException(
@@ -804,6 +644,7 @@ object SnapshotStore {
             case _ => ()
           }
           b = cur // disjoint: rebase this write set onto the new current
+          bm = Some(cm)
       }
     }
     -1L // unreachable
@@ -915,9 +756,10 @@ object SnapshotStore {
     val base = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no snapshot at $root"))
     if (steps.isEmpty) return base
-    var schema = schemaAt(root, base).getOrElse(throw new IllegalStateException(
+    val bm = manifestAt(root, base)
+    var schema = bm.schema.getOrElse(throw new IllegalStateException(
       s"$root predates schema recording; overwrite() it first"))
-    var pc = partColOf(root)
+    var pc = layoutOf(root, Some(bm))
     val stats = statsCols(root)
     // Fresh ids allocate cumulatively across the statement's Adds, past
     // every id any retained version ever recorded.
@@ -976,7 +818,7 @@ object SnapshotStore {
         }
     }
     if (!changed) return base // all steps idempotent no-ops
-    commitRebasing(root, base, Nil, Nil, Some(Set.empty), rowsAt(root, base),
+    commitRebasing(root, base, Nil, Nil, Some(Set.empty), bm.rows,
       statsFor(root, Nil), None, Some(schema), pc)
   }
 
@@ -1080,7 +922,11 @@ object SnapshotStore {
     * on pre-record tables and unpartitioned ones.
     */
   def partColOf(root: String): Option[String] =
-    currentVersion(root).flatMap(partColAt(root, _)) match {
+    layoutOf(root, currentVersion(root).map(manifestAt(root, _)))
+
+  /** [[partColOf]] against an already-parsed current manifest. */
+  private def layoutOf(root: String, current: Option[Manifest]): Option[String] =
+    current.flatMap(_.partCol) match {
       case Some(recorded) => recorded
       case None =>
         val p = Paths.get(root, ManifestDir, "part_col")
@@ -1089,12 +935,14 @@ object SnapshotStore {
           .filter(_.nonEmpty)
     }
 
-  /** Record `c` as the table's partition column if no record exists yet;
-    * fail loudly on a mismatch (one table, one layout — a second
-    * partition column would silently break the per-partition cost model
-    * of merge/compact and the SQL INSERT path).
+  /** Record `c` as the table's partition column if no record exists yet
+    * (`recorded` is the table's current [[partColOf]]); fail loudly on a
+    * mismatch (one table, one layout — a second partition column would
+    * silently break the per-partition cost model of merge/compact and the
+    * SQL INSERT path).
     */
-  private def notePartCol(root: String, c: String): Unit = partColOf(root) match {
+  private def notePartCol(root: String, c: String,
+                          recorded: Option[String]): Unit = recorded match {
     case Some(prev) => require(prev == c,
       s"table at $root is partitioned by '$prev'; a write partitioned by " +
         s"'$c' would mix layouts (overwrite() re-layouts a table)")
@@ -1119,8 +967,9 @@ object SnapshotStore {
              txn: Option[(String, Long)] = None,
              evolveSchema: Boolean = false): Long = {
     val base = currentVersion(root)
-    val tableSchema = base.map(v => schemaAt(root, v)
-      .getOrElse(read(df.sparkSession, root, Some(v)).schema))
+    val bm = base.map(manifestAt(root, _))
+    val tableSchema = for (v <- base; m <- bm)
+      yield m.schema.getOrElse(read(df.sparkSession, root, Some(v)).schema)
     val conformed0 = tableSchema.fold(df)(st => conform(df, st, evolveSchema))
     // Evolved (added) columns join the table's column identity with fresh
     // ids — allocated past every id any retained version used, so a
@@ -1140,8 +989,9 @@ object SnapshotStore {
     // Default to the table's recorded layout so callers that don't thread
     // the partition column (the SQL INSERT path) still append partitioned
     // files; an explicit partCol must agree with the record.
-    val pc = partCol.orElse(partColOf(root))
-    pc.foreach(notePartCol(root, _))
+    val recorded = layoutOf(root, bm)
+    val pc = partCol.orElse(recorded)
+    pc.foreach(notePartCol(root, _, recorded))
     val files = writeDataFiles(conformed, root, pc)
     // Blind append: no partition-level read set, so it rebases over ANY
     // concurrent commit (Delta's append-never-conflicts rule) — only a
@@ -1202,14 +1052,16 @@ object SnapshotStore {
         "is timezone-dependent; partition by a date or string rendering instead")
     val base = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to merge into at $root"))
-    val baseFiles = parseManifest(root, base)
+    val bm = manifestAt(root, base)
+    val baseFiles = entriesOf(root, bm)
     // The kept/replaced split below is a path test on hive partition dirs;
     // a base snapshot NOT partitioned by partCol would silently keep every
     // old file (duplicate keys in affected partitions). Fail loudly instead.
     require(baseFiles.forall(_.split('/').exists(_.startsWith("__part="))),
       s"merge requires a partitioned base snapshot " +
         s"(write it with overwrite(df, root, Some(\"$partCol\")))")
-    notePartCol(root, partCol) // backfill the layout record on pre-record tables
+    // backfill the layout record on pre-record tables
+    notePartCol(root, partCol, layoutOf(root, Some(bm)))
     val target = read(spark, root, Some(base))
     val cols = target.columns.map(col).toSeq
     val parts = updates.select(col(partCol)).distinct()
@@ -1309,7 +1161,8 @@ object SnapshotStore {
                    content: DataFrame,
                    affectedParts: Option[Seq[Any]],
                    txn: Option[(String, Long)] = None): Long = {
-    val baseFiles = parseManifest(root, baseVersion)
+    val bm = manifestAt(root, baseVersion)
+    val baseFiles = entriesOf(root, bm)
     val layout = partColOf(root)
     val partitioned = baseFiles.exists(_.split('/').exists(_.startsWith("__part=")))
     require(layout.isDefined || !partitioned,
@@ -1317,7 +1170,7 @@ object SnapshotStore {
         "rewrite it with SnapshotStore.overwrite(df, root, Some(col)) first")
     require(affectedParts.isEmpty || layout.isDefined,
       s"partition-scoped replaceWhere needs a partitioned table at $root")
-    val schema = schemaAt(root, baseVersion)
+    val schema = bm.schema
     val conformed = schema.fold(content)(s => conform(content, s))
     // Content streams STRAIGHT into the commit's parquet data files — one
     // plan execution, no driver/block-store staging. (The previous shape
@@ -1350,7 +1203,8 @@ object SnapshotStore {
     if (deletionVectors) return deleteWithDv(spark, root, predicate, txn, base)
     val target = read(spark, root, Some(base))
     val keep = !coalesce(predicate, lit(false))
-    val baseFiles = parseManifest(root, base)
+    val bm = manifestAt(root, base)
+    val baseFiles = entriesOf(root, bm)
     partCol match {
       case Some(pc) =>
         require(baseFiles.forall(_.split('/').exists(_.startsWith("__part="))),
@@ -1380,7 +1234,7 @@ object SnapshotStore {
         // Preserve the table's recorded layout: a whole-table delete is a
         // content rewrite, not a re-layouting — survivors land back under
         // the same partition scheme they came from.
-        val layout = partColOf(root)
+        val layout = layoutOf(root, Some(bm))
         // Straight-to-parquet staging (see replaceWhere): a delete matching
         // everything writes no part files -> a zero-file manifest, which
         // read() serves as a schema'd empty frame.
@@ -1417,8 +1271,9 @@ object SnapshotStore {
     * DV anti-join into the parquet scan as usual.
     */
   def positionScan(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val entries = parseManifest(root, version)
-    val schema = schemaAt(root, version)
+    val m = manifestAt(root, version)
+    val entries = entriesOf(root, m)
+    val schema = m.schema
     ensureFieldIdRead(spark, schema)
     if (entries.isEmpty) {
       val st = schema.getOrElse(throw new IllegalStateException(
@@ -1446,9 +1301,10 @@ object SnapshotStore {
   private def deleteWithDv(spark: SparkSession, root: String,
                            predicate: org.apache.spark.sql.Column,
                            txn: Option[(String, Long)], base: Long): Long = {
-    val entries = parseManifest(root, base)
+    val bm = manifestAt(root, base)
+    val entries = entriesOf(root, bm)
     if (entries.isEmpty) return base
-    val schema = schemaAt(root, base)
+    val schema = bm.schema
     // Position scan over ALL entries, minus rows existing DVs already
     // deleted (so re-deleting an already-dead row is a no-op, not a
     // duplicate position).
@@ -1468,7 +1324,7 @@ object SnapshotStore {
     // file's true range, so the recorded [lo,hi] stays a sound bound.
     val cols = statsCols(root)
     val fresh = if (cols.isEmpty) None else {
-      val old = statsAt(root, base)
+      val old = statsOf(root, bm)
       Some(cols -> replaced.flatMap { e =>
         old.get(e).map(v =>
           renderEntry(entryPath(e), entryDvs(e) :+ ref) -> v)
@@ -1478,7 +1334,7 @@ object SnapshotStore {
     // over concurrent commits that left those entries alone (their
     // positions — parquet row indexes of immutable files — stay valid).
     commitRebasing(root, base, replaced, annotated, Some(Set.empty), -1L,
-      fresh, txn, schema, partColOf(root))
+      fresh, txn, schema, layoutOf(root, Some(bm)))
   }
 
   /** Merge-on-read row-level UPDATE / MERGE commit — the deletion-vector
@@ -1518,8 +1374,9 @@ object SnapshotStore {
                  conflictOnAddsIn: Option[Set[String]] = Some(Set.empty),
                  txn: Option[(String, Long)] = None,
                  changeKey: Option[Seq[String]] = None): Long = {
-    val entries = parseManifest(root, baseVersion)
-    val schema = schemaAt(root, baseVersion)
+    val bm = manifestAt(root, baseVersion)
+    val entries = entriesOf(root, bm)
+    val schema = bm.schema
     val layout = partColOf(root)
     val tableCols = schema.map(_.fieldNames.toSeq)
       .getOrElse(acted.columns.toSeq.filterNot(
@@ -1563,7 +1420,7 @@ object SnapshotStore {
       // range); fresh files harvest from their footers.
       val cols = statsCols(root)
       val fresh = if (cols.isEmpty) None else {
-        val old = statsAt(root, baseVersion)
+        val old = statsOf(root, bm)
         val rekeyed = ref.toSeq.flatMap(r => replaced.flatMap { e =>
           old.get(e).map(v => renderEntry(entryPath(e), entryDvs(e) :+ r) -> v)
         }).toMap
@@ -1631,27 +1488,29 @@ object SnapshotStore {
            colRanges: Map[String, (Long, Long)] = Map.empty): DataFrame = {
     val v = asOf.orElse(currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
-    val all = parseManifest(root, v)
-    // A zero-file version is legitimate (e.g. a streaming writer's empty
-    // bootstrap batch, or a delete that emptied the table): serve the
-    // manifest-recorded schema as an empty frame instead of failing every
-    // later read/merge against the table.
-    if (all.isEmpty) {
-      val st = schemaAt(root, v).getOrElse(throw new IllegalStateException(
-        s"version $v of $root has no files and predates schema recording"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-    }
-    val rels = prunedFiles(root, v, partValues, keyRange, colRanges)
+    val m = manifestAt(root, v)
     // Manifest-recorded schema: inference-free planning, and the schema-
     // evolution contract — files predating a column scan as null for it.
-    val schema = schemaAt(root, v)
-    ensureFieldIdRead(spark, schema)
-    if (rels.isEmpty)
-      schema.fold(spark.read)(spark.read.schema)
-        .parquet(Paths.get(root, "data", entryPath(all.head)).toString).limit(0)
-    else
-      scanEntries(spark, root, rels, schema)
+    val schema = m.schema
+    val rels = prunedOf(root, m, partValues, keyRange, colRanges)
+    if (rels.nonEmpty) {
+      ensureFieldIdRead(spark, schema)
+      return scanEntries(spark, root, rels, schema)
+    }
+    entriesOf(root, m).headOption match {
+      case Some(any) =>
+        ensureFieldIdRead(spark, schema)
+        schema.fold(spark.read)(spark.read.schema)
+          .parquet(Paths.get(root, "data", entryPath(any)).toString).limit(0)
+      case None =>
+        // A zero-file version is legitimate (e.g. a streaming writer's
+        // empty bootstrap batch, or a delete that emptied the table): serve
+        // the manifest-recorded schema as an empty frame instead of failing
+        // every later read/merge against the table.
+        val st = schema.getOrElse(throw new IllegalStateException(
+          s"version $v of $root has no files and predates schema recording"))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
+    }
   }
 
   /** Root-relative files of `version` surviving manifest-level pruning
@@ -1661,44 +1520,30 @@ object SnapshotStore {
   def prunedFiles(root: String, version: Long,
                   partValues: Option[Set[String]] = None,
                   keyRange: Option[(Long, Long)] = None,
-                  colRanges: Map[String, (Long, Long)] = Map.empty): Seq[String] = {
+                  colRanges: Map[String, (Long, Long)] = Map.empty): Seq[String] =
+    prunedOf(root, manifestAt(root, version), partValues, keyRange, colRanges)
+
+  private def prunedOf(root: String, m: Manifest,
+                       partValues: Option[Set[String]],
+                       keyRange: Option[(Long, Long)],
+                       colRanges: Map[String, (Long, Long)]): Seq[String] = {
     val effective = colRanges ++ keyRange.flatMap(r =>
       statsCols(root).headOption.map(_ -> r)).toMap
-    sectionsAt(root, version) match {
+    def overlaps(byCol: Map[String, (Long, Long)]) =
+      effective.forall { case (c, (lo, hi)) =>
+        byCol.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+      }
+    val dirs = partValues.map(_.map(partDir))
+    m.sections match {
       case Some(refs) =>
         // Lazy by construction: partition pruning selects SECTIONS before
         // any per-file metadata is read — the layout's whole point.
-        val chosen = partValues match {
-          case Some(vals) =>
-            val dirs = vals.map(partDir)
-            refs.filter { case (pd, _) => dirs.contains(pd) }
-          case None => refs
-        }
-        val entries = chosen.flatMap { case (_, ref) => readSection(root, ref) }
-        (if (effective.isEmpty) entries.map(_._1)
-         else entries.collect {
-           case (f, byCol) if effective.forall { case (c, (lo, hi)) =>
-             byCol.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-           } => f
-         }).sorted
+        val chosen = dirs.fold(refs)(ds => refs.filter { case (pd, _) => ds(pd) })
+        chosen.flatMap { case (_, ref) => readSection(root, ref) }
+          .collect { case (f, byCol) if overlaps(byCol) => f }.sorted
       case None =>
-        val all = parseManifest(root, version)
-        val byPart = partValues match {
-          case Some(vals) =>
-            val dirs = vals.map(partDir)
-            all.filter(_.split('/').exists(dirs.contains))
-          case None => all
-        }
-        if (effective.isEmpty) byPart
-        else {
-          val ranges = statsAt(root, version)
-          byPart.filter { f =>
-            val byCol = ranges.getOrElse(f, Map.empty)
-            effective.forall { case (c, (lo, hi)) =>
-              byCol.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-            }
-          }
-        }
+        dirs.fold(m.files)(ds => m.files.filter(_.split('/').exists(ds)))
+          .filter(f => overlaps(m.ranges.getOrElse(f, Map.empty)))
     }
   }
 
@@ -1741,18 +1586,20 @@ object SnapshotStore {
       "pass sortBy or zorderBy, not both")
     val base = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to compact at $root"))
-    require(parseManifest(root, base)
+    val bm = manifestAt(root, base)
+    require(entriesOf(root, bm)
       .forall(_.split('/').exists(_.startsWith("__part="))),
       "compact requires a partitioned base snapshot")
-    notePartCol(root, partCol) // backfill the layout record on pre-record tables
-    val victims = prunedFiles(root, base, partValues)
+    // backfill the layout record on pre-record tables
+    notePartCol(root, partCol, layoutOf(root, Some(bm)))
+    val victims = prunedOf(root, bm, partValues, None, Map.empty)
     if (victims.isEmpty) return base // nothing to rewrite, publish nothing
     // Recorded schema: victims predating an evolved column still compact
     // into full-schema files (nulls materialized) instead of silently
     // narrowing the table. DV-aware: compacting an annotated file
     // MATERIALIZES its deletions — the rewrite drops the annotation and
     // the orphaned DV file falls to vacuum.
-    val slice = scanEntries(spark, root, victims, schemaAt(root, base))
+    val slice = scanEntries(spark, root, victims, bm.schema)
     val arranged =
       if (zorderBy.nonEmpty) {
         // Quantile-bucket maxes from one tiny aggregate (offline layout
@@ -1780,7 +1627,7 @@ object SnapshotStore {
     // rewrote one of the victims out from under the compaction.
     commitRebasing(root, base, victims, newFiles, Some(Set.empty), -1L,
       statsFor(root, newFiles), txn,
-      schemaAt(root, base).orElse(Some(slice.schema)), Some(partCol))
+      bm.schema.orElse(Some(slice.schema)), Some(partCol))
   }
 
   /** OPTIMIZE — the auto-sized maintenance rewrite behind the SQL
@@ -1803,19 +1650,20 @@ object SnapshotStore {
                txn: Option[(String, Long)] = None): Long = {
     val base = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to optimize at $root"))
-    val entries = entriesAt(root, base)
+    val bm = manifestAt(root, base)
+    val entries = entriesOf(root, bm)
     if (entries.isEmpty) return base
     val bytes = entries.map(e =>
       Files.size(Paths.get(root, "data", entryPath(e)))).sum
     val numFiles = math.max(1L,
       math.ceil(bytes.toDouble / targetFileBytes).toLong).toInt
-    partColOf(root) match {
+    layoutOf(root, Some(bm)) match {
       case Some(pc) =>
         compact(spark, root, pc, None, numFiles, Nil, zorderBy, txn)
       case None =>
         require(zorderBy.isEmpty || zorderBy.length >= 2,
           "zorderBy takes two or more columns")
-        val schema = schemaAt(root, base)
+        val schema = bm.schema
         val slice = scanEntries(spark, root, entries, schema)
         val arranged =
           if (zorderBy.nonEmpty) {
@@ -1854,7 +1702,7 @@ object SnapshotStore {
     version.orElse(currentVersion(root)) match {
       case None => DvDebt(0, 0, 0L)
       case Some(v) =>
-        val entries = parseManifest(root, v)
+        val entries = entriesAt(root, v)
         val annotated = entries.filter(e => entryDvs(e).nonEmpty)
         val refs = annotated.flatMap(entryDvs).distinct
         val dvRows = refs
@@ -1871,18 +1719,18 @@ object SnapshotStore {
     * commit rebases over concurrent appends like a compaction (row
     * movement only). Returns the current version unchanged when no file
     * is annotated. This collapses the measured merge-on-read read tax
-    * (UpdateProbe: full read 9.49 s at sf100 under DVs vs 0.74 s plain)
-    * without compact's whole-partition rewrite.
+    * (BASELINE.md Round 15: full read 9.49 s at sf100 under DVs vs
+    * 0.74 s plain) without compact's whole-partition rewrite.
     */
   def materializeDv(spark: SparkSession, root: String,
                     txn: Option[(String, Long)] = None): Long = {
     val base = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no snapshot at $root"))
-    val entries = parseManifest(root, base)
-    val annotated = entries.filter(e => entryDvs(e).nonEmpty)
+    val bm = manifestAt(root, base)
+    val annotated = entriesOf(root, bm).filter(e => entryDvs(e).nonEmpty)
     if (annotated.isEmpty) return base
-    val layout = partColOf(root)
-    val schema = schemaAt(root, base)
+    val layout = layoutOf(root, Some(bm))
+    val schema = bm.schema
     val rewritten = scanEntries(spark, root, annotated, schema)
     val newFiles = writeDataFiles(rewritten, root, layout)
     commitRebasing(root, base, annotated, newFiles, Some(Set.empty), -1L,
@@ -1932,7 +1780,8 @@ object SnapshotStore {
     if (version == cur) return cur
     require(Files.exists(manifestPath(root, version)),
       s"version $version does not exist at $root (vacuumed or never committed)")
-    val target = entriesAt(root, version)
+    val m = manifestAt(root, version)
+    val target = entriesOf(root, m)
     val missingData = target.map(entryPath)
       .filterNot(f => Files.exists(Paths.get(root, "data", f)))
     val missingDv = target.flatMap(entryDvs).distinct
@@ -1941,14 +1790,10 @@ object SnapshotStore {
       s"cannot restore $root to v$version: vacuum already removed " +
         s"${missingData.size} data file(s) and ${missingDv.size} DV file(s) " +
         (missingData ++ missingDv).take(3).mkString("(e.g. ", ", ", ")"))
-    val schema = schemaAt(root, version)
-    val layout = partColAt(root, version).getOrElse(None)
     val cols = statsCols(root)
-    val stats =
-      if (cols.isEmpty) None
-      else Some(cols -> statsAt(root, version))
+    val stats = if (cols.isEmpty) None else Some(cols -> statsOf(root, m))
     commitRebasing(root, cur, entriesAt(root, cur), target, None,
-      rowsAt(root, version), stats, txn, schema, layout)
+      m.rows, stats, txn, m.schema, m.partCol.flatten)
   }
 
   /** Zero-copy shallow CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE`
@@ -1986,7 +1831,8 @@ object SnapshotStore {
       s"version $v does not exist at $srcRoot (vacuumed or never committed)")
     require(currentVersion(dstRoot).isEmpty,
       s"clone target $dstRoot already has a manifest log")
-    val entries = entriesAt(srcRoot, v)
+    val m = manifestAt(srcRoot, v)
+    val entries = entriesOf(srcRoot, m)
     def linkInto(sub: String, rel: String): Unit = {
       val src = Paths.get(srcRoot, sub, rel)
       require(Files.exists(src),
@@ -2020,9 +1866,8 @@ object SnapshotStore {
     }
     val stats =
       if (srcStatsCols.isEmpty) None
-      else Some(srcStatsCols -> statsAt(srcRoot, v))
-    commit(dstRoot, 0L, entries, rowsAt(srcRoot, v), stats, None,
-      schemaAt(srcRoot, v), partColAt(srcRoot, v).getOrElse(None))
+      else Some(srcStatsCols -> statsOf(srcRoot, m))
+    commit(dstRoot, 0L, entries, m.rows, stats, None, m.schema, m.partCol.flatten)
   }
 
   /** Manifest set diff `from` → `to`: (files added, files removed). The
@@ -2030,7 +1875,8 @@ object SnapshotStore {
     * data read.
     */
   def changedFiles(root: String, from: Long, to: Long): (Seq[String], Seq[String]) = {
-    (sectionsAt(root, from), sectionsAt(root, to)) match {
+    val (ma, mb) = (manifestAt(root, from), manifestAt(root, to))
+    (ma.sections, mb.sections) match {
       case (Some(fa), Some(fb)) =>
         // Identical section refs carry identical file sets (content-
         // addressed) — skip them wholesale; the diff parses only TOUCHED
@@ -2045,8 +1891,8 @@ object SnapshotStore {
           .flatMap(s => readSection(root, s._2).map(_._1)).toSet
         ((b -- a).toSeq.sorted, (a -- b).toSeq.sorted)
       case _ =>
-        val a = parseManifest(root, from).toSet
-        val b = parseManifest(root, to).toSet
+        val a = entriesOf(root, ma).toSet
+        val b = entriesOf(root, mb).toSet
         ((b -- a).toSeq.sorted, (a -- b).toSeq.sorted)
     }
   }
@@ -2090,10 +1936,11 @@ object SnapshotStore {
     // Both sides scan under the TO version's schema so the delta is
     // union-compatible even across a schema-evolving commit (old files
     // yield nulls for columns added since `from`).
-    val schema = schemaAt(root, to)
+    val toM = manifestAt(root, to)
+    val schema = toM.schema
     def scan(fs: Seq[String]): DataFrame = {
       if (fs.isEmpty)
-        (parseManifest(root, to) ++ parseManifest(root, from)).headOption match {
+        (entriesOf(root, toM) ++ entriesAt(root, from)).headOption match {
           case Some(any) =>
             schema.fold(spark.read)(spark.read.schema)
               .parquet(Paths.get(root, "data", entryPath(any)).toString).limit(0)
@@ -2113,7 +1960,7 @@ object SnapshotStore {
     val del = r.exceptAll(a)
     val key: Seq[String] =
       if (updateKey.nonEmpty) updateKey
-      else if (to == from + 1) changeKeyAt(root, to).getOrElse(Nil)
+      else if (to == from + 1) toM.changeKey.getOrElse(Nil)
       else Nil
     if (key.isEmpty || !key.forall(a.columns.contains))
       ins.withColumn("_change_type", lit("insert"))
@@ -2146,25 +1993,24 @@ object SnapshotStore {
     * a commit's data files exist BEFORE its manifest does, so a vacuum
     * racing an in-flight commit would see them unreferenced and delete
     * them — the writer would then publish a manifest naming missing
-    * files. Files younger than the window are never touched; set 0 only
-    * when no concurrent writer can exist.
+    * files. Files and directories younger than the window are never
+    * touched (an in-flight writer's output directory can be empty for a
+    * moment); set 0 only when no concurrent writer can exist. The same
+    * window reclaims publish tmp files a crashed commit left in
+    * `_manifests`.
     */
   def vacuum(root: String, keepVersions: Int = 2,
              minAgeMs: Long = 15L * 60 * 1000): Unit = {
     val vs = versions(root)
     val dead = vs.dropRight(keepVersions)
-    val live = vs.takeRight(keepVersions)
-    val liveEntries = live.flatMap(parseManifest(root, _))
+    val live = vs.takeRight(keepVersions).map(manifestAt(root, _))
+    val liveEntries = live.flatMap(entriesOf(root, _))
     val referenced = liveEntries.map(entryPath).toSet
     // Harvest txn markers out of the manifests about to be pruned so
     // lastTxn's exactly-once contract survives retention (a compaction or
     // other writer's commits can push an app's latest marker out of the
     // keep window).
-    val harvested = dead.flatMap { v =>
-      val txt = new String(Files.readAllBytes(manifestPath(root, v)),
-        StandardCharsets.UTF_8)
-      TxnRe.findFirstMatchIn(txt).map(m => m.group(1) -> m.group(2).toLong)
-    }
+    val harvested = dead.flatMap(manifestAt(root, _).txn)
     if (harvested.nonEmpty) {
       val merged = (txnCheckpoint(root).toSeq ++ harvested)
         .groupBy(_._1).map { case (app, bs) => app -> bs.map(_._2).max }
@@ -2173,25 +2019,26 @@ object SnapshotStore {
     val cutoff = System.currentTimeMillis() - minAgeMs
     val dataDir = Paths.get(root, "data")
     import scala.jdk.CollectionConverters._
+    def old(p: Path) = Files.getLastModifiedTime(p).toMillis <= cutoff
     if (Files.isDirectory(dataDir)) {
       val it = Files.walk(dataDir)
-      val victims = try it.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          !referenced.contains(dataDir.relativize(p).toString) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .toList
+      val (files, dirs) = try it.iterator().asScala.toList
+        .filter(_ != dataDir).partition(Files.isRegularFile(_))
       finally it.close()
-      victims.foreach(Files.delete)
-      // prune now-empty commit dirs (best-effort, deepest first)
-      val dirs = Files.walk(dataDir)
-      try dirs.iterator().asScala.toList.reverse
-        .filter(p => Files.isDirectory(p) && p != dataDir)
-        .foreach { p =>
-          val s = Files.list(p)
-          val empty = try !s.iterator().hasNext finally s.close()
-          if (empty) Files.delete(p)
-        }
-      finally dirs.close()
+      // Directory ages are taken BEFORE deleting files: removing a file
+      // bumps its directory's mtime, and an emptied old commit dir must
+      // still go.
+      val oldDirs = dirs.filter(p => Files.isDirectory(p) && old(p))
+      files.filter(p => !referenced.contains(dataDir.relativize(p).toString) && old(p))
+        .foreach(Files.delete)
+      // prune now-empty old commit dirs (best-effort, deepest first)
+      oldDirs.reverse.foreach { p =>
+        val s = Files.list(p)
+        val empty = try !s.iterator().hasNext finally s.close()
+        if (empty)
+          try Files.delete(p)
+          catch { case _: java.nio.file.DirectoryNotEmptyException => () }
+      }
     }
     // DV GC: drop deletion-vector files no LIVE manifest entry annotates
     // (a compaction materialized them, or their data file was rewritten
@@ -2202,8 +2049,7 @@ object SnapshotStore {
       val it = Files.list(dvDir)
       try it.iterator().asScala
         .filter(p => Files.isRegularFile(p) &&
-          !liveDvs.contains(p.getFileName.toString) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff)
+          !liveDvs.contains(p.getFileName.toString) && old(p))
         .toList.foreach(Files.delete)
       finally it.close()
     }
@@ -2213,8 +2059,7 @@ object SnapshotStore {
     val stagingDir = Paths.get(root, "_staging")
     if (Files.isDirectory(stagingDir)) {
       val it = Files.list(stagingDir)
-      val stale = try it.iterator().asScala.filter(p =>
-        Files.getLastModifiedTime(p).toMillis <= cutoff).toList
+      val stale = try it.iterator().asScala.filter(old).toList
       finally it.close()
       stale.foreach { p =>
         val walk = Files.walk(p)
@@ -2225,15 +2070,23 @@ object SnapshotStore {
     // Section GC: drop section files no LIVE manifest references, same
     // age guard (an in-flight commit writes its sections before its
     // manifest exists).
-    val liveSecs = live.flatMap(v =>
-      sectionsAt(root, v).map(_.map(_._2)).getOrElse(Nil)).toSet
+    val liveSecs = live.flatMap(_.sections.getOrElse(Nil).map(_._2)).toSet
     val secDir = Paths.get(root, ManifestDir, SectionDir)
     if (Files.isDirectory(secDir)) {
       val it = Files.list(secDir)
       try it.iterator().asScala
-        .filter(p => !liveSecs.contains(p.getFileName.toString) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff)
+        .filter(p => !liveSecs.contains(p.getFileName.toString) && old(p))
         .toList.foreach(Files.delete)
+      finally it.close()
+    }
+    // Publish GC: a commit that crashed between writing its tmp file and
+    // linking it leaves the tmp behind; a live publish's tmp is younger.
+    val manifestDir = Paths.get(root, ManifestDir)
+    if (Files.isDirectory(manifestDir)) {
+      val it = Files.list(manifestDir)
+      try it.iterator().asScala
+        .filter(p => Manifest.isPublishTmp(p.getFileName.toString) && old(p))
+        .toList.foreach(Files.deleteIfExists)
       finally it.close()
     }
     dead.foreach(v => Files.deleteIfExists(manifestPath(root, v)))

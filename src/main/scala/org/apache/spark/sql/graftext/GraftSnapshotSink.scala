@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.sources.SnapshotStore
 import graft.streaming.SnapshotSink
 
 /** Shared `option("path")` / `option("table", "<catalog>.<table>")`
@@ -26,7 +27,7 @@ private[graftext] object GraftTableResolve {
         throw new IllegalArgumentException(
           s"$who: no snapshot catalog named '${parts.head}' — set $confKey"))
       val dir = parts.tail.foldLeft(java.nio.file.Paths.get(catRoot))(_.resolve(_))
-      require(java.nio.file.Files.isDirectory(dir.resolve("_manifests")),
+      require(SnapshotStore.isTable(dir.toString),
         s"$who: $t resolves to $dir, which is not a snapshot table")
       dir.toString
     }).getOrElse(throw new IllegalArgumentException(
@@ -88,8 +89,7 @@ final class GraftSnapshotSinkProvider extends StreamSinkProvider
       : org.apache.spark.sql.sources.BaseRelation = {
     val p = parameters.map { case (k, v) => k.toLowerCase -> v }
     val root = GraftTableResolve.root(sqlContext, p, "graft")
-    require(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(root).resolve("_manifests")),
+    require(SnapshotStore.isTable(root),
       s"graft: '$root' is not a snapshot table (no manifest log); " +
         "point option(\"path\") at a table root or option(\"table\") at " +
         "a catalog name")

@@ -1375,4 +1375,166 @@ class SnapshotStoreSpec extends AnyFunSuite {
         version = Some(0L)) // src v0 fell to the vacuum above
     }
   }
+
+  private def manifestFile(root: String, v: Long) =
+    Paths.get(root, "_manifests", f"v$v%013d.json")
+
+  private def text(p: java.nio.file.Path) =
+    new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
+
+  private def ageBy(p: java.nio.file.Path, ms: Long): Unit =
+    Files.setLastModifiedTime(p,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ms))
+
+  test("manifest bytes are pinned: flat manifest, sectioned root and a section line") {
+    import org.apache.spark.sql.types._
+    val idMeta = new MetadataBuilder().putLong("parquet.field.id", 1L).build()
+    val schema = StructType(Seq(StructField("k", LongType, nullable = true, idMeta),
+      StructField("s", StringType)))
+    val files = Seq("c1/__part=2/part-00001.parquet", "c1/__part=1/part-00000.parquet",
+      "c1/__part=1/part-00002.parquet")
+    val stats = Some(Seq("k", "s") -> Map(
+      files(0) -> Map("k" -> (-3L, 9L)),
+      files(1) -> Map("s" -> (10L, 20L), "k" -> (1L, 5L))))
+    val app = "app \"q\" \\ x"
+    def commitFixture(root: String) = SnapshotStore.commit(root, 0L, files, 7L, stats,
+      Some(app -> 4L), Some(schema), Some("p"), Some(Seq("k")))
+    val schemaJson = """"schema":"{\"type\":\"struct\",\"fields\":[{\"name\":\"k\",""" +
+      """\"type\":\"long\",\"nullable\":true,\"metadata\":{\"parquet.field.id\":1}},""" +
+      """{\"name\":\"s\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}}]}","""
+    val head = """{"rows":7,""" + schemaJson +
+      """"part_col":"p","change_key":["k"],"txn":{"app":"app \"q\" \\ x","batch":4},"""
+
+    val flat = scratch("snap_golden_flat_")
+    commitFixture(flat)
+    assert(text(manifestFile(flat, 0L)) == head +
+      """"stats":{"cols":["k","s"],"ranges":{""" +
+      """"c1/__part=1/part-00000.parquet":{"k":[1,5],"s":[10,20]},""" +
+      """"c1/__part=2/part-00001.parquet":{"k":[-3,9]}}},""" +
+      """"files":["c1/__part=1/part-00000.parquet","c1/__part=1/part-00002.parquet",""" +
+      """"c1/__part=2/part-00001.parquet"]}""")
+    // Every accessor projects the same parse of those bytes.
+    assert(SnapshotStore.rowsAt(flat, 0L) == 7L)
+    assert(SnapshotStore.schemaAt(flat, 0L).contains(schema))
+    assert(SnapshotStore.partColAt(flat, 0L).contains(Some("p")))
+    assert(SnapshotStore.changeKeyAt(flat, 0L).contains(Seq("k")))
+    assert(SnapshotStore.lastTxn(flat, app).contains(4L))
+    assert(SnapshotStore.statsAt(flat, 0L) == stats.get._2)
+    assert(SnapshotStore.entriesAt(flat, 0L) == files.sorted)
+
+    val plain = scratch("snap_golden_plain_")
+    SnapshotStore.commit(plain, 0L, Seq("c2/part-0.parquet"), -1L)
+    assert(text(manifestFile(plain, 0L)) ==
+      """{"rows":-1,"part_col":null,"files":["c2/part-0.parquet"]}""")
+
+    val saved = SnapshotStore.sectionThreshold
+    SnapshotStore.sectionThreshold = 1
+    try {
+      val sec = scratch("snap_golden_sec_")
+      commitFixture(sec)
+      assert(text(manifestFile(sec, 0L)) == head + """"stats_cols":["k","s"],""" +
+        """"sections":{"__part=1":"fc83a9762cb0916380daf44ce92fe5d7.list",""" +
+        """"__part=2":"f3eba0887294d32afde36af89b3b5870.list"}}""")
+      assert(text(Paths.get(sec, "_manifests", "sections",
+        "fc83a9762cb0916380daf44ce92fe5d7.list")) ==
+        "c1/__part=1/part-00000.parquet\t{\"k\":[1,5],\"s\":[10,20]}\n" +
+          "c1/__part=1/part-00002.parquet")
+      assert(SnapshotStore.statsAt(sec, 0L) == stats.get._2)
+      assert(SnapshotStore.entriesAt(sec, 0L) == files.sorted)
+    } finally SnapshotStore.sectionThreshold = saved
+  }
+
+  test("a manifest truncated inside its files list fails naming the manifest, never yields fewer files") {
+    val root = scratch("snap_trunc_files_")
+    val v = SnapshotStore.overwrite(base, root, Some("c_nationkey"))
+    val mf = manifestFile(root, v)
+    val whole = text(mf)
+    val firstEntry = whole.indexOf("\"files\":[") + "\"files\":[".length
+    val afterFirst = whole.indexOf("\",\"", firstEntry) + 2
+    assert(SnapshotStore.filesAt(root, v).size >= 2 && afterFirst > firstEntry,
+      "fixture needs at least two files")
+    // Cut after a whole entry, inside the next entry, and just before "]}".
+    for (cut <- Seq(afterFirst, afterFirst + 5, whole.length - 2)) {
+      Files.write(mf, whole.substring(0, cut).getBytes("UTF-8"))
+      val e1 = intercept[IllegalStateException](SnapshotStore.filesAt(root, v))
+      assert(e1.getMessage.contains(mf.toString), e1.getMessage)
+      val e2 = intercept[IllegalStateException](SnapshotStore.read(spark, root))
+      assert(e2.getMessage.contains(mf.toString), e2.getMessage)
+    }
+  }
+
+  test("a manifest truncated before its files list fails with the same named error") {
+    val root = scratch("snap_trunc_head_")
+    val v = SnapshotStore.overwrite(base, root, Some("c_nationkey"),
+      declareStatsCol = Some("c_custkey"))
+    val mf = manifestFile(root, v)
+    val whole = text(mf)
+    val ranges = whole.indexOf("\"ranges\":{")
+    assert(ranges > 0 && ranges < whole.indexOf("\"files\":["))
+    for (cut <- Seq(ranges + 20, whole.indexOf("\"part_col\""), 1, 0)) {
+      Files.write(mf, whole.substring(0, cut).getBytes("UTF-8"))
+      val calls = Seq[() => Any](
+        () => SnapshotStore.filesAt(root, v),
+        () => SnapshotStore.read(spark, root),
+        () => SnapshotStore.prunedFiles(root, v, keyRange = Some((10L, 20L))),
+        () => SnapshotStore.rowsAt(root, v))
+      calls.foreach { call =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains(mf.toString), e.getMessage)
+      }
+    }
+  }
+
+  test("a leftover publish tmp file is no version; the next commit takes its number; vacuum reclaims it once old") {
+    import spark.implicits._
+    val root = scratch("snap_pubtmp_")
+    SnapshotStore.overwrite(base, root, Some("c_nationkey"))
+    val mdir = Paths.get(root, "_manifests")
+    // A publish of version 1 that crashed before linking its tmp file.
+    val tmp = mdir.resolve(f".v${1L}%013d.json.${java.util.UUID.randomUUID()}.tmp")
+    Files.write(tmp, """{"rows":-1,"part_col":"c_nat""".getBytes("UTF-8"))
+    assert(SnapshotStore.versions(root) == Seq(0L))
+    assert(SnapshotStore.currentVersion(root).contains(0L))
+    val extra = Seq((900001L, 3L, "NEW")).toDF("c_custkey", "c_nationkey", "c_mktsegment")
+    assert(SnapshotStore.append(extra, root) == 1L)
+    assert(SnapshotStore.read(spark, root).count() == base.count() + 1)
+    def tmps() = {
+      import scala.jdk.CollectionConverters._
+      val it = Files.list(mdir)
+      try it.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(".") && n.endsWith(".tmp")).toSet
+      finally it.close()
+    }
+    assert(tmps() == Set(tmp.getFileName.toString), "a commit must not leave its own tmp")
+    SnapshotStore.vacuum(root, keepVersions = 2, minAgeMs = 60000L)
+    assert(Files.exists(tmp), "a young tmp may be a live publish")
+    ageBy(tmp, 3600000L)
+    SnapshotStore.vacuum(root, keepVersions = 2, minAgeMs = 60000L)
+    assert(!Files.exists(tmp), "vacuum must reclaim a stale publish tmp")
+    assert(SnapshotStore.versions(root) == Seq(0L, 1L))
+  }
+
+  test("vacuum keeps an empty data directory younger than minAgeMs (an in-flight write's output)") {
+    val root = scratch("snap_vacdir_")
+    SnapshotStore.overwrite(base, root, Some("c_nationkey"))
+    val v0Dirs = SnapshotStore.entriesAt(root, 0L).map(_.split('/').head).toSet
+    SnapshotStore.overwrite(base, root, Some("c_nationkey"))
+    val inFlight = Paths.get(root, "data", java.util.UUID.randomUUID().toString)
+    Files.createDirectories(inFlight)
+    SnapshotStore.vacuum(root, keepVersions = 1, minAgeMs = 60000L)
+    assert(Files.isDirectory(inFlight), "a fresh empty output dir must survive")
+    ageBy(inFlight, 3600000L)
+    // An emptied old commit dir goes in the same sweep that deletes its files.
+    import scala.jdk.CollectionConverters._
+    v0Dirs.foreach { d =>
+      val it = Files.walk(Paths.get(root, "data", d))
+      try it.iterator().asScala.toList.foreach(ageBy(_, 3600000L))
+      finally it.close()
+    }
+    SnapshotStore.vacuum(root, keepVersions = 1, minAgeMs = 60000L)
+    assert(!Files.exists(inFlight), "a stale empty dir is reclaimed")
+    assert(v0Dirs.forall(d => !Files.exists(Paths.get(root, "data", d))),
+      "the superseded commit's directory must be pruned with its files")
+    assert(SnapshotStore.read(spark, root).count() == base.count())
+  }
 }
