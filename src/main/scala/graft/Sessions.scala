@@ -43,9 +43,7 @@ object Sessions {
       // debt exceeded 61 GB free. 2 min bounds the debt to ~one query's
       // live set at a cost of one background System.gc() per interval —
       // the same knob a long-running cluster app sets for executor disks.
-      // (SPARK_GRAFT_PERIODIC_GC overrides for A/B attribution runs.)
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
+      .config("spark.cleaner.periodicGC.interval", "2min")
       // The library's session extensions: graft SQL functions
       // (quantized_dot, float_dot) and row-level SQL DML (UPDATE / MERGE
       // INTO) over graft snapshot tables. Construction-time only — hosts

@@ -202,16 +202,14 @@ object Ranking {
     * `memCeilingBytes` of corpus parquet the edge frame is data-sized
     * enough that deserialized row blocks (~3x the columnar footprint —
     * the r13 sf100 OOM forensics) are the wrong trade and the parquet
-    * round-trip above is used. SPARK_GRAFT_EDGE_MAT=mem|parquet overrides
-    * for A/B attribution.
+    * round-trip above is used. The two modes were a wash at sf1 and mem
+    * ~1.2 s faster at sf0.1 (OPTIMIZATION_r17.md, paired sf1
+    * measurements).
     */
   private[operators] def materializeAdaptive(df: DataFrame, tag: String,
       dataDir: String, memCeilingBytes: Long = 1L << 30): DataFrame =
-    sys.env.get("SPARK_GRAFT_EDGE_MAT").getOrElse(
-      if (corpusBytes(dataDir) <= memCeilingBytes) "mem" else "parquet") match {
-      case "mem" => df.localCheckpoint(true)
-      case _ => materialize(df, tag)
-    }
+    if (corpusBytes(dataDir) <= memCeilingBytes) df.localCheckpoint(true)
+    else materialize(df, tag)
 
   def tradeEdges(s: SparkSession, d: String): DataFrame = {
     val rel = materializeAdaptive(lineitem(s, d)

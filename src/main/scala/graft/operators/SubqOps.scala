@@ -108,8 +108,8 @@ object SubqOps extends QueryPack {
         |         FROM lineitem l2 WHERE l2.l_partkey = l1.l_partkey))
         |ORDER BY s_suppkey ASC""".stripMargin,
 
-    // The PRODUCTION rewrite of q_subq_having_corr (the RewriteProbe
-    // winner, 1.70x at sf10): the subquery form pays THREE lineitem
+    // The PRODUCTION rewrite of q_subq_having_corr (1.70x at sf10,
+    // BASELINE.md "Q20 subquery form vs its single-pass window rewrite"): the subquery form pays THREE lineitem
     // aggregations (the grouped fact + two decorrelated correlated
     // scalars); the same semantics is ONE grouped aggregate + per-part
     // window aggregates over the already-tiny (supp, part) rollup —

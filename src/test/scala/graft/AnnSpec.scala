@@ -39,8 +39,8 @@ class AnnSpec extends AnyFunSuite {
     // item 5); the sf0.001 gates (16 lists) cannot see a regression at
     // that operating point, so this spec regenerates the 20k-vector
     // corpus (DataGen — distribution-gated by DataGenSpec) and floors the
-    // same metric AnnSweep reports, on the same deterministic 200-probe
-    // sampler. Floor 0.55 = measured 0.600 minus corpus-evolution margin.
+    // same metric as the BASELINE.md round-10 sweep, on the same
+    // deterministic 200-probe sampler. Floor 0.55 = measured 0.600 minus corpus-evolution margin.
     // Corpus and index persist under target/graft-scratch across runs
     // (content-fingerprinted reuse).
     val dir = "target/graft-scratch/ann-recall-sf1"
@@ -90,8 +90,8 @@ class AnnSpec extends AnyFunSuite {
     // registered exact join carries (r14 verdict #3's floor) — and the
     // SAME 0.05 corpus-evolution margin under its operating point. ADC
     // tracks the within-list exact ceiling to ~1.5 pts at every nprobe
-    // (PqResidualProbe, BASELINE round 16), so this floor can never sit
-    // ABOVE the exact path's own 0.55 floor: on the corpus build this
+    // (BASELINE.md, round-16 residual IVF-PQ recall), so this floor can
+    // never sit ABOVE the exact path's own 0.55 floor: on the corpus build this
     // round the exact default point measured 0.600 and ADC 0.585 — the
     // old 0.6 floor red-flagged the documented 1.5-pt tracking gap, not
     // a regression.
@@ -131,7 +131,7 @@ class AnnSpec extends AnyFunSuite {
     assert(recall >= 0.55, f"IVF×PQ recall $recall%.3f < 0.55 floor")
 
     // The 0.7 gate at the byte-budget operating point (r15 verdict #4,
-    // measured round 16 — PqResidualProbe/BASELINE): with RESIDUAL codes
+    // measured round 16, BASELINE.md): with RESIDUAL codes
     // (IVFADC) the ADC ranking tracks the within-list exact ceiling to
     // ~1.5 pts at EVERY nprobe (16: 0.620 vs ceiling 0.635; 28: 0.750 vs
     // 0.765), so recall is list-pruning-bound, not code-fidelity-bound —
@@ -235,31 +235,28 @@ class AnnSpec extends AnyFunSuite {
     assert(recall >= 0.6, s"recall $recall")
   }
 
-  test("ann join grouped (default) ≡ salted ≡ plain rerank, row for row") {
-    // All three rerank shapes must be pure execution-geometry changes:
-    // same pairs, same top-k, same ties. rerankParts selects the shape:
-    // 0 = the r16 grouped streaming-top-k DEFAULT (no pair rows, no
-    // pair sort), -1 = the plain windowed shape, 64 (> the session's 32
-    // shuffle partitions) = the salted windowed shape. Exact doubles
-    // compared at 1e-12 scale — the grouped kernel reuses FloatDot's
-    // sequential accumulation, so the cosines are bitwise-identical.
-    def rows(parts: Int) =
-      graft.operators.AnnIvf.annJoin(spark, TestSpark.sf0001, rerankParts = parts)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          math.rint(r.getDouble(3) * 1e12))).toSet
-    val grouped = rows(0)
-    val plain = rows(-1)
-    val salted = rows(64)
-    assert(plain.nonEmpty && plain == salted,
-      s"shapes diverge: onlyPlain=${(plain -- salted).take(3)} onlySalted=${(salted -- plain).take(3)}")
-    assert(grouped == plain,
+  test("ann join grouped (default) ≡ plain rerank, row for row") {
+    // The grouped streaming-top-k rerank annJoin runs must be a pure
+    // execution-geometry change over the windowed plain rerank: same
+    // pairs, same top-k, same ties. Both rerank the SAME index and probe
+    // assignments. Exact doubles compared at 1e-12 scale — the grouped
+    // kernel reuses FloatDot's sequential accumulation, so the cosines
+    // are bitwise-identical.
+    def rowSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        math.rint(r.getDouble(3) * 1e12))).toSet
+    val grouped = rowSet(AnnIvf.annJoin(spark, TestSpark.sf0001))
+    val (lists, assignments) =
+      AnnIvf.exactJoinInputs(spark, AnnIvf.ensureIndex(spark, TestSpark.sf0001))
+    val plain = rowSet(AnnIvf.rerank(lists, assignments, 3, broadcastProbes = false))
+    assert(plain.nonEmpty && grouped == plain,
       s"grouped kernel diverges: onlyGrouped=${(grouped -- plain).take(3)} onlyPlain=${(plain -- grouped).take(3)}")
   }
 
   test("grouped ADC stage (ListTopKAdc) ≡ windowed PqAsymDot reference, row for row") {
     // The r16 ADC rewrite (annJoinPq's grouped streaming-top-k stage)
     // deleted the windowed PqAsymDot shape outright, so — unlike the exact
-    // rerank, which keeps plain/salted anchors — kernel equivalence rested
+    // rerank, which keeps its plain anchor — kernel equivalence rested
     // solely on recall floors (ADVICE r16). This is the missing identity
     // pin: the SAME (assignments × codes) inputs scored both ways must
     // produce identical survivor rows, bitwise at 1e-12 score scale —
